@@ -41,9 +41,8 @@ object Cli {
             ResultStore.upsert(ResultStore.read(spark, dest), env)
           else env
         val digest = ResultStore.commit(spark, merged, dest)
-        // count the committed store, not `merged` — its lazy plan still
-        // points at the pre-promote files
-        val n = ResultStore.read(spark, dest).count()
+        // the count commit just wrote to the manifest, not a re-scan
+        val n = ResultStore.manifestRows(dest).getOrElse(0L)
         println(s"[graft] $provider: $n results, $digest")
       case "status" :: root :: Nil =>
         Catalog.status(spark, root).collect().foreach { r =>
@@ -62,13 +61,19 @@ object Cli {
         // resolve outside the store root and delete an unrelated tree
         require(p.startsWith(rootP) && p != rootP,
           s"provider '$provider' escapes the store root")
-        if (java.nio.file.Files.exists(p)) {
-          val walk = java.nio.file.Files.walk(p)
+        // the store's siblings go too: a leftover .staging or .old
+        // would otherwise be recovered as the store on the next open
+        val dirs = Seq("", ".staging", ".old", ".quarantine")
+          .map(s => java.nio.file.Paths.get(s"$p$s"))
+          .filter(java.nio.file.Files.exists(_))
+        dirs.foreach { d =>
+          val walk = java.nio.file.Files.walk(d)
           try walk.sorted(java.util.Comparator.reverseOrder())
             .forEach(f => java.nio.file.Files.delete(f))
           finally walk.close()
-          println(s"[graft] cleared $provider")
-        } else println(s"[graft] nothing to clear for $provider")
+        }
+        if (dirs.nonEmpty) println(s"[graft] cleared $provider")
+        else println(s"[graft] nothing to clear for $provider")
       case "config" :: rest if rest.length <= 1 =>
         // `vunnel config` parity: resolved defaults ⊕ YAML ⊕ env as YAML
         print(ConfigLayer.render(ConfigLayer.resolve(

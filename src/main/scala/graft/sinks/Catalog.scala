@@ -16,10 +16,14 @@ object Catalog {
     * (provider, n_results, manifest_digest). */
   def status(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val providers = Files.list(Paths.get(root)).iterator().asScala
-      .filter(p => Files.isDirectory(p) &&
-        Files.exists(p.resolve("manifest.txt")))
-      .map(_.getFileName.toString).toSeq.sorted
+    val ls = Files.list(Paths.get(root))
+    val dirs = try ls.iterator().asScala.filter(Files.isDirectory(_))
+      .map(_.getFileName.toString).toList finally ls.close()
+    // a store caught between its promote's two moves exists only as
+    // its .staging/.old siblings; ResultStore.manifest recovers it
+    val providers = dirs.map(_.stripSuffix(".staging").stripSuffix(".old"))
+      .distinct.sorted
+      .filter(name => ResultStore.manifest(s"$root/$name").isDefined)
     providers.map { name =>
       val dir = s"$root/$name"
       // the manifest carries the row count commit already paid for —

@@ -11,11 +11,12 @@ import graft.Envelope
   * its payload schema, and a payload that does not satisfy the named
   * schema's structural requirements must not ship silently.
   *
-  * The check is a pure Column predicate: `from_json` against the
-  * family's typed shape (PERMISSIVE — a type-mismatched or missing
-  * field parses to null) plus required-field/required-element
-  * conditions, so validation is codegen'd row-local work with no extra
-  * pass over the data. The payload carries the reference's
+  * The check is row-local Column work with no extra pass over the
+  * data: one projection parses each OS envelope's payload once with
+  * `from_json` against the typed shape (PERMISSIVE — a type-mismatched
+  * or missing field parses to null), and one version-parameterized
+  * predicate applies the required-field/required-element conditions
+  * to that column. The payload carries the reference's
   * `{"Vulnerability": {...}}` wrapper (`utils/vulnerability.py:145-146`);
   * the required list applies to the wrapped object.
   */
@@ -101,38 +102,50 @@ object SchemaGate {
     "1.1.1" -> OsFeatures(true, false, true, true, false),
     "1.1.2" -> OsFeatures(true, false, true, true, true))
 
-  /** OS-schema validity (required: Name, NamespaceName, Description,
-    * Severity, Link; every FixedIn entry: Name, NamespaceName, Version,
-    * VersionFormat; every CVSS entry: version, vector_string, status,
-    * base_metrics with all four scores). Version-gated: a field newer
-    * than the envelope's declared schema version fails the row — a
-    * consumer parsing by URL would silently drop it, so emitting it
-    * under the old URL is a version-labeling bug, not compatible
-    * output. (Stricter than raw draft-04, whose open
-    * additionalProperties accepts any unknown field.) */
-  def osValid(item: Column, f: OsFeatures = osVersions("1.1.0")): Column = {
-    // the wrapper itself is required: a flat (unwrapped) record parses
-    // to a null Vulnerability field and fails the p.isNotNull check
-    val p = from_json(item, osType).getField("Vulnerability")
-    def gated(entry: Column, field: String, allowed: Boolean): Column =
-      if (allowed) lit(true) else entry.getField(field).isNull
-    val advisoriesOk = (fi: Column) =>
-      if (!f.advisories) fi.getField("Advisories").isNull
-      else fi.getField("Advisories").isNull ||
-        forall(fi.getField("Advisories"), a =>
-          a.getField("Advisory").isNotNull &&
-            a.getField("Version").isNotNull)
+  /** Registered os-schema urls, one per published version
+    * (Envelope.OsSchema is the 1.1.0 entry), with the features each
+    * grants. Non-OS families (nvd/osv/github/csaf-vex) are NOT
+    * registered — they fall through to the parseable-JSON-object
+    * fallback, the same scope the reference's known-schema validation
+    * has. */
+  private val osUrls: Map[String, OsFeatures] =
+    osVersions.map { case (v, f) => Envelope.osSchema(v) -> f }
+
+  /** `schema` names a registered os-schema version granting `feature`. */
+  private def grants(schema: Column, feature: OsFeatures => Boolean): Column =
+    schema.isin(osUrls.collect { case (u, f) if feature(f) => u }
+      .toSeq.sorted: _*)
+
+  /** OS-schema validity of the parsed `Vulnerability` object `p` under
+    * the version `schema` names (required: Name, NamespaceName,
+    * Description, Severity, Link; every FixedIn entry: Name,
+    * NamespaceName, Version, VersionFormat; every CVSS entry: version,
+    * vector_string, status, base_metrics with all four scores).
+    * Version-gated: a field newer than the declared schema version
+    * fails the row — a consumer parsing by URL would silently drop it,
+    * so emitting it under the old URL is a version-labeling bug, not
+    * compatible output. (Stricter than raw draft-04, whose open
+    * additionalProperties accepts any unknown field.) One predicate
+    * serves every version: a feature gate reads `field IS NULL OR
+    * schema IN (urls granting it)`. */
+  private def osValid(p: Column, schema: Column): Column = {
+    def gated(entry: Column, field: String, f: OsFeatures => Boolean) =
+      entry.getField(field).isNull || grants(schema, f)
     val fixedInOk = p.getField("FixedIn").isNull ||
       forall(p.getField("FixedIn"), fi =>
         fi.getField("Name").isNotNull &&
           fi.getField("NamespaceName").isNotNull &&
           fi.getField("Version").isNotNull &&
           fi.getField("VersionFormat").isNotNull &&
-          gated(fi, "VulnerableRange", f.vulnerableRange) &&
-          gated(fi, "Issued", f.issued) &&
-          gated(fi, "Available", f.available) &&
-          gated(fi, "Arch", f.arch) &&
-          advisoriesOk(fi))
+          gated(fi, "VulnerableRange", _.vulnerableRange) &&
+          gated(fi, "Issued", _.issued) &&
+          gated(fi, "Available", _.available) &&
+          gated(fi, "Arch", _.arch) &&
+          (fi.getField("Advisories").isNull ||
+            grants(schema, _.advisories) &&
+            forall(fi.getField("Advisories"), a =>
+              a.getField("Advisory").isNotNull &&
+                a.getField("Version").isNotNull)))
     val cvssOk = p.getField("CVSS").isNull ||
       forall(p.getField("CVSS"), c =>
         c.getField("version").isNotNull &&
@@ -144,6 +157,8 @@ object SchemaGate {
           c.getField("base_metrics")
             .getField("exploitability_score").isNotNull &&
           c.getField("base_metrics").getField("impact_score").isNotNull)
+    // the wrapper itself is required: a flat (unwrapped) record parses
+    // to a null Vulnerability field and fails the p.isNotNull check
     p.isNotNull &&
       p.getField("Name").isNotNull &&
       p.getField("NamespaceName").isNotNull &&
@@ -153,26 +168,24 @@ object SchemaGate {
       fixedInOk && cvssOk
   }
 
-  /** Registered structural validators by schema url: one per published
-    * os-schema version (Envelope.OsSchema is the 1.1.0 entry). Non-OS
-    * families (nvd/osv/github/csaf-vex) are NOT registered — they fall
-    * through to [[rowValid]]'s parseable-JSON-object fallback, the same
-    * scope the reference's known-schema validation has. */
-  val validators: Map[String, Column => Column] =
-    osVersions.map { case (v, feats) =>
-      graft.Envelope.osSchema(v) ->
-        ((item: Column) => osValid(item, feats))
-    }
-
-  /** Per-row validity: a registered family gets its structural check;
-    * an unregistered family only requires a parseable JSON object
-    * (the reference likewise validates only known schemas). */
-  def rowValid(schemaCol: Column, itemCol: Column): Column = {
-    val fallback = itemCol.isNotNull &&
-      from_json(itemCol, MapType(StringType, StringType)).isNotNull
-    validators.foldLeft(when(lit(false), lit(false))) {
-      case (acc, (url, v)) => acc.when(schemaCol === url, v(itemCol))
-    }.otherwise(fallback)
+  /** `df` plus the per-row validity column `__ok`: a registered os
+    * family gets its structural check; an unregistered family only
+    * requires a parseable JSON object (the reference likewise validates
+    * only known schemas). The OS payload is parsed in its own
+    * projection, once per envelope and only for os-schema rows, and
+    * the predicate reads that column: the optimizer does not collapse
+    * a projection whose non-trivial expression its consumer reads more
+    * than once. */
+  private def mark(df: DataFrame): DataFrame = {
+    val (schema, item) = (col("schema"), col("item"))
+    val isOs = grants(schema, _ => true)
+    val fallback = item.isNotNull &&
+      from_json(item, MapType(StringType, StringType)).isNotNull
+    df.withColumn("__os",
+        when(isOs, from_json(item, osType).getField("Vulnerability")))
+      .withColumn("__ok",
+        when(isOs, osValid(col("__os"), schema)).otherwise(fallback))
+      .drop("__os")
   }
 
   /** Split envelopes into (valid, quarantined) — the §7.4.7 pattern:
@@ -183,17 +196,18 @@ object SchemaGate {
     * leaked one pinned entry per call for the session lifetime, with
     * no handle for anyone to release it. */
   def validate(df: DataFrame): (DataFrame, DataFrame) = {
-    val marked = df.withColumn("__ok", rowValid(col("schema"), col("item")))
+    val marked = mark(df)
     (marked.filter(col("__ok")).drop("__ok"),
       marked.filter(!col("__ok")).drop("__ok"))
   }
 
-  /** [[validate]] with the marked frame cached so the count + two
-    * writes of a commit evaluate the predicate once. The caller MUST
-    * invoke the returned release thunk after consuming both frames. */
+  /** [[validate]] with the marked frame cached, so a commit that
+    * writes the valid rows and then counts and writes the rejected
+    * ones parses each envelope once. The caller MUST invoke the
+    * returned release thunk after consuming both frames. */
   def validateCached(df: DataFrame)
       : (DataFrame, DataFrame, () => Unit) = {
-    val marked = df.withColumn("__ok", rowValid(col("schema"), col("item")))
+    val marked = mark(df)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     (marked.filter(col("__ok")).drop("__ok"),
       marked.filter(!col("__ok")).drop("__ok"),

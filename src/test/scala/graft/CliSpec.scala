@@ -28,6 +28,63 @@ class CliSpec extends AnyFunSuite {
     assert(Catalog.status(spark, root).count() == 0)
   }
 
+  test("a crash between the promote's two moves loses nothing: cli run " +
+      "keeps the earlier envelopes, status and clear see the store") {
+    import java.nio.file.{Files, Path, Paths}
+    def store(ids: String*) = ids.map(i => (i, Envelope.OsSchema, "{}"))
+      .toDF("identifier", "schema", "item")
+    def ids(dest: String) = ResultStore.read(spark, dest)
+      .select("identifier").as[String].collect().toSet
+    val wolfi = {
+      val root = Files.createTempDirectory("graft-fresh").toString
+      Cli.run(spark, List("run", "secdb", fixture("secdb.json"),
+        "wolfi:rolling", root))
+      ids(s"$root/wolfi")
+    }
+    assert(wolfi.size == 6)
+    // both crash states leave `wolfi` missing and the previous store
+    // in `wolfi.old`; they differ in how far staging got
+    for (stagingDone <- Seq(true, false)) {
+      def crashed(): (String, Path) = {
+        val root = Files.createTempDirectory("graft-crash").toString
+        val dest = Paths.get(s"$root/wolfi")
+        ResultStore.commit(spark, store("CVE-1999-0001"), dest.toString)
+        ResultStore.commit(spark, store("CVE-1999-0001", "CVE-1999-0002"),
+          s"$root/next")
+        if (!stagingDone)
+          Files.delete(Paths.get(s"$root/next/manifest.txt"))
+        Files.move(Paths.get(s"$root/next"), Paths.get(s"$dest.staging"))
+        Files.move(dest, Paths.get(s"$dest.old"))
+        (root, dest)
+      }
+      def siblings(dest: Path) = Seq(".staging", ".old")
+        .filter(s => Files.exists(Paths.get(s"$dest$s")))
+      // a finished staging is the newer store: roll it forward;
+      // an unfinished one is discarded and the old store restored
+      val earlier =
+        if (stagingDone) Set("CVE-1999-0001", "CVE-1999-0002")
+        else Set("CVE-1999-0001")
+
+      val (root, dest) = crashed()
+      Cli.run(spark, List("run", "secdb", fixture("secdb.json"),
+        "wolfi:rolling", root))
+      assert(ids(dest.toString) == earlier ++ wolfi, s"stagingDone=$stagingDone")
+      assert(ResultStore.manifestRows(dest.toString)
+        .contains((earlier ++ wolfi).size.toLong))
+      assert(siblings(dest).isEmpty)
+
+      val (root2, _) = crashed()
+      val status = Catalog.status(spark, root2).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+      assert(status == Seq(("wolfi", earlier.size.toLong)))
+
+      val (root3, dest3) = crashed()
+      Cli.run(spark, List("clear", root3, "wolfi"))
+      assert(Catalog.status(spark, root3).count() == 0)
+      assert(!Files.exists(dest3) && siblings(dest3).isEmpty)
+    }
+  }
+
   test("registry mirrors the reference's 27-provider catalog + tag select") {
     import graft.providers.Registry
     assert(Registry.providers.size == 27)

@@ -181,6 +181,15 @@ class ProviderSpec extends AnyFunSuite {
     assert(d2 == d3)
   }
 
+  test("manifest digest of a fixed 2-row store is pinned") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pin").toString
+    val rows = Seq(("CVE-2024-1", "s", "{\"a\":1}"), ("CVE-2024-2", "s", "{}"))
+      .toDF("identifier", "schema", "item")
+    val digest = ResultStore.commit(spark, rows, s"$dir/r")
+    assert(digest == "xxh64:ab6a17b7f61e70e")
+    assert(ResultStore.manifest(s"$dir/r").contains(s"$digest\nrows:2\n"))
+  }
+
   test("manifest digest is partition-layout-invariant (the sort lives " +
       "inside the aggregate, not in a pre-orderBy)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-det").toString

@@ -180,4 +180,93 @@ class SchemaGateSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$dest.quarantine")),
       "stale quarantine sidecar must be deleted on a clean run")
   }
+
+  /** Spark jobs started while `body` runs, counted by a listener. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.bridge
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    bridge.settleListenerBus(sc, 10000)
+    sc.addSparkListener(l)
+    try { body; bridge.settleListenerBus(sc, 10000) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("validateCached parses each envelope once: the cached gate plan " +
+      "holds one OS parse and one fallback parse") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def parses(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => parses(a.inputPlan)
+      case _ => p.expressions.map(_.collect { case j: JsonToStructs => j }
+        .size).sum + p.children.map(parses).sum
+    }
+    // repartitioned so the optimizer cannot fold the gate into a local
+    // relation: the plan keeps the shape a provider's scan gives it
+    val rows = Seq(env("good", ok), env("nvd", "{}", Envelope.NvdSchema))
+      .toDF("identifier", "schema", "item").repartition(2)
+    val (good, bad, release) = SchemaGate.validateCached(rows)
+    try {
+      val cached = good.queryExecution.withCachedData
+        .collectFirst { case r: InMemoryRelation => r }
+      assert(cached.isDefined, "the gate's marked frame is not cached")
+      val n = parses(cached.get.cacheBuilder.cachedPlan)
+      assert(n == 2, s"$n from_json calls in the cached gate plan")
+      assert(good.count() == 2 && bad.isEmpty)
+    } finally release()
+  }
+
+  test("commitValidated on a 2-row frame runs at most 3 Spark jobs, " +
+      "plus the quarantine write") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    def jobs(rows: Seq[(String, String, String)], dest: String,
+        rejected: Long): Int = {
+      val df = rows.toDF("identifier", "schema", "item")
+      var out = ("", -1L)
+      val n = jobsDuring { out = ResultStore.commitValidated(spark, df, dest) }
+      assert(out._2 == rejected)
+      assert(ResultStore.manifestRows(dest).contains(rows.size - rejected))
+      n
+    }
+    val clean = Seq(env("a", ok), env("b", ok))
+    jobs(clean, s"$dir/warm", 0)   // warm-up
+    val n = jobs(clean, s"$dir/clean", 0)
+    // write, then the manifest aggregate's shuffle and result stages
+    assert(n <= 3, s"commitValidated ran $n jobs")
+    val q = jobs(Seq(env("a", ok), env("bad", "{}")), s"$dir/quarantine", 1)
+    assert(q <= 4, s"commitValidated with a rejected row ran $q jobs")
+  }
+
+  test("strict failure leaves no staging and the live store and its " +
+      "quarantine sidecar untouched") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft-strict").toString
+    val dest = s"$dir/results"
+    val rows = Seq(env("good", ok), env("bad", "{}"))
+      .toDF("identifier", "schema", "item")
+    val (digest, _) = ResultStore.commitValidated(spark, rows, dest)
+    val manifest = ResultStore.manifest(dest)
+    val err = intercept[IllegalArgumentException] {
+      ResultStore.commitValidated(spark,
+        Seq(env("other", ok), env("worse", "[]"))
+          .toDF("identifier", "schema", "item"), dest, strict = true)
+    }
+    assert(err.getMessage.contains("schema validation"))
+    assert(!Files.exists(Paths.get(s"$dest.staging")))
+    assert(ResultStore.manifest(dest) == manifest)
+    assert(manifest.exists(_.startsWith(digest)))
+    assert(ResultStore.read(spark, dest)
+      .select("identifier").as[String].collect().toSeq == Seq("good"))
+    assert(spark.read.parquet(s"$dest.quarantine")
+      .select("identifier").as[String].collect().toSeq == Seq("bad"))
+  }
 }
