@@ -21,19 +21,18 @@ object Catalog {
       .map(_.getFileName.toString).toList finally ls.close()
     // a store caught between its promote's two moves exists only as
     // its .staging/.old siblings; ResultStore.manifest recovers it
-    val providers = dirs.map(_.stripSuffix(".staging").stripSuffix(".old"))
+    val manifests = dirs.map(_.stripSuffix(".staging").stripSuffix(".old"))
       .distinct.sorted
-      .filter(name => ResultStore.manifest(s"$root/$name").isDefined)
-    providers.map { name =>
-      val dir = s"$root/$name"
+      .flatMap(name => ResultStore.manifest(s"$root/$name").map(name -> _))
+    manifests.map { case (name, manifest) =>
       // the manifest carries the row count commit already paid for —
-      // status over N providers is O(N) small file reads, never a
+      // status over N providers is N small file reads, never a
       // parquet scan per store; a store whose manifest predates the
       // rows: line (or was hand-built) falls back to one scan
-      val n = ResultStore.manifestRows(dir)
-        .getOrElse(ResultStore.read(spark, dir).count())
-      val digest = ResultStore.manifest(dir)
-        .flatMap(_.linesIterator.find(_.startsWith("xxh64:"))).getOrElse("")
+      val n = ResultStore.rowsOf(manifest)
+        .getOrElse(ResultStore.read(spark, s"$root/$name").count())
+      val digest = manifest.linesIterator.find(_.startsWith("xxh64:"))
+        .getOrElse("")
       (name, n, digest)
     }.toDF("provider", "n_results", "digest")
   }

@@ -1,8 +1,12 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** Keyed, checksummed, atomically-promoted result store — the Spark-first
   * re-expression of vunnel's result layer:
@@ -12,10 +16,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *    as last-wins / first-wins dedup over an explicit precedence column
   *    (never row order — SURVEY §7.4 hard part 3)
   *  - atomic tmp→final promote (`result.py:259-302`): a commit is
-  *    stage (write the results to a staging directory) → one manifest
-  *    aggregate over the written files → promote (rename into place);
-  *    every open first recovers from a crash between the promote's
-  *    two moves
+  *    stage (ONE write job into a staging directory, the manifest
+  *    aggregate observed on the rows as they are written) → promote
+  *    (rename into place); every open first recovers from a crash
+  *    between the promote's two moves
   *  - xxh64 checksum manifest of the result files (`workspace.py:268-284`)
   *  - incremental merge: new batch upserted over the previous snapshot
   *    (`result.py:259-267` "copy previous DB then INSERT OR REPLACE")
@@ -59,65 +63,87 @@ object ResultStore {
     dedupKeyed(s.unionByName(b), Replace, idCol).drop("precedence")
   }
 
+  /** The envelope columns every store holds (`result.py:33-37`), in
+    * order: [[commit]] requires them and [[read]] reads with them. */
+  val envelopeSchema: StructType = Encoders.product[graft.Envelope].schema
+
   /** Write results + manifest to a staging dir, then atomically promote.
     * Returns the manifest digest (digest-of-sorted-listing, the
-    * workspace.py:268-284 scheme, with Spark's xxhash64).
+    * workspace.py:268-284 scheme, with Spark's xxhash64). `df` must hold
+    * exactly the [[envelopeSchema]] columns; anything else fails loudly.
     *
     * `df` MAY read from `destDir` itself (the upsert path): it is fully
     * materialized into staging before the promote. But the caller must
     * not re-execute `df` after commit — its lazy plan still references
     * the replaced files; use [[read]] on the committed store instead. */
   def commit(spark: SparkSession, df: DataFrame, destDir: String): String = {
-    val (digest, _) = stage(spark, df, destDir)
+    val (digest, _) = stage(envelopes(df).withColumn("__ok", lit(true)),
+      destDir)
     promote(destDir)
     digest
   }
 
-  /** Write `df` to `<destDir>.staging` and its manifest beside it:
-    * the write job, then ONE aggregate over the written files that
-    * yields the digest and the row count — read back with the writer's
-    * own schema, so no schema-inference job. `rejected` rows (the
-    * gate's quarantine) join that aggregate through a union only to be
-    * counted. Returns (digest, rejected count).
+  /** `df`, once it is checked to hold exactly the [[envelopeSchema]]
+    * columns. */
+  private def envelopes(df: DataFrame): DataFrame = {
+    require(df.schema.map(f => f.name -> f.dataType) ==
+        envelopeSchema.map(f => f.name -> f.dataType),
+      s"a store holds envelopes ${envelopeSchema.simpleString}, " +
+        s"not ${df.schema.simpleString}")
+    df
+  }
+
+  /** How long [[stage]] waits for its observed manifest after the write
+    * returns: the observation arrives on the listener bus, normally
+    * within milliseconds, and a missing one fails the commit instead of
+    * hanging it. */
+  private val manifestWait = 2.minutes
+
+  /** Write the valid rows of `marked` (envelopes plus the gate's
+    * boolean `__ok`) to `<destDir>.staging` and the manifest beside it,
+    * in ONE Spark job: the write's input carries a
+    * [[org.apache.spark.sql.Observation]] whose aggregate yields the
+    * digest, the row count and the rejected count as the rows stream
+    * into the writer — no read-back of the written files, no second
+    * aggregate job. Returns (digest, rejected count).
     *
-    * Manifest: xxh64 of each row's canonical form, sorted by identifier
-    * (deterministic listing order, O2), then digest-of-listing. The
-    * sort lives INSIDE the aggregate (sort_array over the collected
-    * pairs): a plain orderBy before a global collect_list is not
-    * order-stable — the final aggregate merges per-partition partial
-    * lists in shuffle-fetch arrival order, so the same store could
-    * digest differently across runs once the listing spans partitions
-    * (invisible at test scale, where AQE coalesces to one partition).
-    * The single aggregation task holds (identifier, 8-byte hash)
-    * pairs — the listing itself, same scale as the checksum listing
-    * the reference builds in one process (workspace.py:268-284), not
-    * the store's payload bytes. */
-  private def stage(spark: SparkSession, df: DataFrame, destDir: String,
-      rejected: Option[DataFrame] = None): (String, Long) = {
+    * Manifest: xxh64 of each valid row's canonical form, sorted by
+    * identifier (deterministic listing order, O2), then
+    * digest-of-listing. The sort lives INSIDE the aggregate (sort_array
+    * over the collected pairs): the observation merges per-task partial
+    * lists in task-completion order, so an unsorted list could digest
+    * the same store differently across runs. The collected pairs
+    * gather on the driver: (identifier, 8-byte hash) per row — the
+    * listing itself, the scale of the single aggregation task this
+    * replaces and of the checksum listing the reference builds in one
+    * process (workspace.py:268-284), not the store's payload bytes.
+    * The observe node sits directly under the write, above any join or
+    * shuffle in `marked`, so AQE's empty-relation propagation (which
+    * can erase an observe inside a pruned subtree, see
+    * [[graft.operators.Dedup.minhashCandidates]]) leaves it in place. */
+  private def stage(marked: DataFrame, destDir: String): (String, Long) = {
     recover(destDir)
     val staging = Paths.get(destDir + ".staging")
     deleteRecursive(staging)
-    val results = staging.resolve("results").toString
-    df.write.mode(SaveMode.Overwrite).parquet(results)
-
-    val listing = spark.read.schema(df.schema).parquet(results)
-      .select(struct(col("identifier"),
-        xxhash64(col("identifier"), col("schema"), col("item")).as("h"))
-        .as("e"))
-    val entryType = listing.schema("e").dataType
-    val r = rejected.fold(listing)(b =>
-        listing.unionByName(b.select(lit(null).cast(entryType).as("e"))))
-      .agg(xxhash64(array_join(transform(sort_array(collect_list(col("e"))),
-          e => concat_ws(":", e.getField("identifier"), e.getField("h"))),
-          "\n")),
-        count(col("e")), count(lit(1)))
-      .head()
+    val ok = col("__ok")
+    val entry = struct(col("identifier"),
+      xxhash64(col("identifier"), col("schema"), col("item")).as("h"))
+    val manifest = Observation()
+    marked.observe(manifest,
+        xxhash64(array_join(transform(
+            sort_array(collect_list(when(ok, entry))),
+            e => concat_ws(":", e.getField("identifier"), e.getField("h"))),
+          "\n")).as("digest"),
+        count_if(ok).as("rows"), count_if(!ok).as("rejected"))
+      .filter(ok).drop("__ok")
+      .write.mode(SaveMode.Overwrite)
+      .parquet(staging.resolve("results").toString)
+    val r = Await.result(manifest.future, manifestWait)
     val digest = s"xxh64:${java.lang.Long.toHexString(r.getLong(0))}"
-    val rows = r.getLong(1)
     // written last: a staging dir holding a manifest is complete
     Files.writeString(staging.resolve("manifest.txt"),
-      s"$digest\nrows:$rows\n")
-    (digest, r.getLong(2) - rows)
+      s"$digest\nrows:${r.getLong(1)}\n")
+    (digest, r.getLong(2))
   }
 
   /** Atomic promote: move the live store aside, rename staging into
@@ -155,34 +181,39 @@ object ResultStore {
     * named schema's structural check are written to a `.quarantine`
     * sidecar (never into the store); valid rows commit as usual. With
     * `strict = true` any invalid envelope fails the commit instead
-    * (the reference's raise-on-invalid mode): the valid rows are
-    * staged first (their write fills the gate's cache, and the stage
-    * aggregate counts the rejected rows), then the staging dir is
+    * (the reference's raise-on-invalid mode): the staging dir is
     * deleted and the call throws before anything is promoted — the
     * live store and its sidecar stay as they were. Returns (manifest
-    * digest, quarantined count). */
+    * digest, quarantined count).
+    *
+    * The gate's marked frame feeds [[stage]] uncached, so a clean
+    * commit is one job that parses each envelope once. The trade: only
+    * when rejects exist, the quarantine write (or the strict error's
+    * first-bad-identifier lookup) re-evaluates `df` and the gate,
+    * filtered to the rejected rows. Both run before the promote, so
+    * an upsert `df` reading `destDir` still sees the old store. */
   def commitValidated(spark: SparkSession, df: DataFrame, destDir: String,
       strict: Boolean = false): (String, Long) = {
-    val (good, bad, release) = SchemaGate.validateCached(df)
-    try {
-      val (digest, badCount) = stage(spark, good, destDir, Some(bad))
-      if (strict && badCount > 0) {
-        deleteRecursive(Paths.get(destDir + ".staging"))
-        throw new IllegalArgumentException(
-          s"$badCount envelope(s) fail schema validation; first: " +
-            bad.select("identifier", "schema").head().mkString(", "))
-      }
-      if (badCount > 0)
-        bad.write.mode(SaveMode.Overwrite)
-          .parquet(Paths.get(destDir + ".quarantine").toString)
-      else
-        // a clean run must clear the previous run's sidecar — stale
-        // quarantine parquet after the producer fixed its records
-        // reads as "still failing validation" to anything inspecting
-        deleteRecursive(Paths.get(destDir + ".quarantine"))
-      promote(destDir)
-      (digest, badCount)
-    } finally release()
+    val marked = SchemaGate.mark(envelopes(df))
+    val (digest, badCount) = stage(marked, destDir)
+    val bad = marked.filter(!col("__ok")).drop("__ok")
+    if (strict && badCount > 0) {
+      deleteRecursive(Paths.get(destDir + ".staging"))
+      throw new IllegalArgumentException(
+        s"$badCount envelope(s) fail schema validation; first: " +
+          bad.select("identifier", "schema").take(1)
+            .map(_.mkString(", ")).mkString)
+    }
+    if (badCount > 0)
+      bad.write.mode(SaveMode.Overwrite)
+        .parquet(Paths.get(destDir + ".quarantine").toString)
+    else
+      // a clean run must clear the previous run's sidecar — stale
+      // quarantine parquet after the producer fixed its records
+      // reads as "still failing validation" to anything inspecting
+      deleteRecursive(Paths.get(destDir + ".quarantine"))
+    promote(destDir)
+    (digest, badCount)
   }
 
   /** K4: per-ecosystem fragment sink (ubuntu `parser.py:307-373`
@@ -221,10 +252,13 @@ object ResultStore {
     commit(spark, df.coalesce(nFiles), destDir)
   }
 
-  /** Read back a committed store. */
+  /** Read back a committed store: its envelopes, read with
+    * [[envelopeSchema]] (every commit requires those columns), so no
+    * schema-inference job runs. */
   def read(spark: SparkSession, destDir: String): DataFrame = {
     recover(destDir)
-    spark.read.parquet(Paths.get(destDir).resolve("results").toString)
+    spark.read.schema(envelopeSchema)
+      .parquet(Paths.get(destDir).resolve("results").toString)
   }
 
   /** The store's manifest line, if committed. */
@@ -237,9 +271,12 @@ object ResultStore {
   /** Row count from the committed manifest — what [[commit]] already
     * counted, so callers don't re-scan the store for it. */
   def manifestRows(destDir: String): Option[Long] =
-    manifest(destDir).flatMap(_.linesIterator
-      .collectFirst { case l if l.startsWith("rows:") =>
-        l.stripPrefix("rows:").trim.toLong })
+    manifest(destDir).flatMap(rowsOf)
+
+  /** The `rows:` line of a manifest's text. */
+  private[sinks] def rowsOf(manifest: String): Option[Long] =
+    manifest.linesIterator.collectFirst { case l if l.startsWith("rows:") =>
+      l.stripPrefix("rows:").trim.toLong }
 
   private def deleteRecursive(p: Path): Unit = {
     if (Files.exists(p)) {

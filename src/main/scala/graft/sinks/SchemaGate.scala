@@ -175,8 +175,9 @@ object SchemaGate {
     * projection, once per envelope and only for os-schema rows, and
     * the predicate reads that column: the optimizer does not collapse
     * a projection whose non-trivial expression its consumer reads more
-    * than once. */
-  private def mark(df: DataFrame): DataFrame = {
+    * than once. `ResultStore.commitValidated` feeds this frame straight
+    * into its one write job. */
+  private[sinks] def mark(df: DataFrame): DataFrame = {
     val (schema, item) = (col("schema"), col("item"))
     val isOs = grants(schema, _ => true)
     val fallback = item.isNotNull &&
@@ -201,10 +202,11 @@ object SchemaGate {
       marked.filter(!col("__ok")).drop("__ok"))
   }
 
-  /** [[validate]] with the marked frame cached, so a commit that
-    * writes the valid rows and then counts and writes the rejected
-    * ones parses each envelope once. The caller MUST invoke the
-    * returned release thunk after consuming both frames. */
+  /** [[validate]] with the marked frame cached, so a caller consuming
+    * both frames in several actions parses each envelope once. Not on
+    * the commit path: `ResultStore.commitValidated` counts the rejected
+    * rows inside its write job and needs no cache. The caller MUST
+    * invoke the returned release thunk after consuming both frames. */
   def validateCached(df: DataFrame)
       : (DataFrame, DataFrame, () => Unit) = {
     val marked = mark(df)

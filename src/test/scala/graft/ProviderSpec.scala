@@ -206,6 +206,63 @@ class ProviderSpec extends AnyFunSuite {
       s"digest depends on partition layout: $digests")
   }
 
+  test("an empty commit, static or emptied by AQE at run time, " +
+      "writes rows:0 and the empty-listing digest") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val rows = spark.range(200)
+      .select(concat(lit("id"), col("id")).as("identifier"),
+        lit("s").as("schema"), concat(lit("v"), col("id")).as("item"))
+    // no key survives, but only a run finds out: the optimizer keeps
+    // the join, AQE empties it once the filtered side has run
+    val noKeys = spark.range(200).repartition(4).filter(col("id") > 1000)
+      .select(concat(lit("id"), col("id")).as("identifier"))
+    val runtimeEmpty = rows.repartition(4).join(noKeys, "identifier")
+      .select("identifier", "schema", "item")
+    assert(runtimeEmpty.queryExecution.optimizedPlan
+      .collectFirst { case j: Join => j }.isDefined)
+    val frames = Seq(
+      "static" -> Seq.empty[(String, String, String)]
+        .toDF("identifier", "schema", "item"),
+      "filtered" -> rows.filter(col("identifier") === "none"),
+      "runtime" -> runtimeEmpty)
+    frames.foreach { case (name, df) =>
+      val dest = s"$dir/$name"
+      // bounded: a commit whose manifest observation never arrives
+      // fails here instead of hanging the suite
+      val digest = Await.result(
+        Future(ResultStore.commit(spark, df, dest)), 90.seconds)
+      assert(digest == "xxh64:98b1582b0977e704", name)
+      assert(ResultStore.manifest(dest).contains(s"$digest\nrows:0\n"), name)
+      assert(ResultStore.read(spark, dest).isEmpty, name)
+    }
+  }
+
+  test("the manifest digest equals a recomputation over the committed " +
+      "store's rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-recompute")
+      .toString
+    val rows = spark.range(500)
+      .select(concat(lit("id"), col("id")).as("identifier"),
+        lit("s").as("schema"), concat(lit("v"), col("id")).as("item"))
+      .repartition(7)
+    val digest = ResultStore.commit(spark, rows, s"$dir/r")
+    // the listing built on the driver: sorted `identifier:h` lines,
+    // h the row's xxhash64, and the digest the xxhash64 of the listing
+    val listing = ResultStore.read(spark, s"$dir/r")
+      .select(col("identifier"),
+        xxhash64(col("identifier"), col("schema"), col("item")))
+      .as[(String, Long)].collect().sorted
+      .map { case (id, h) => s"$id:$h" }.mkString("\n")
+    val expected = Seq(listing).toDF("l").select(xxhash64(col("l")))
+      .as[Long].head()
+    assert(digest == s"xxh64:${java.lang.Long.toHexString(expected)}")
+    assert(ResultStore.manifestRows(s"$dir/r").contains(500L))
+  }
+
   test("result store: compaction preserves content digest, shrinks files") {
     val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
     val dest = s"$dir/results"

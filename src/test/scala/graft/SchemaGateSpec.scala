@@ -199,22 +199,27 @@ class SchemaGateSpec extends AnyFunSuite {
     n.get
   }
 
-  test("validateCached parses each envelope once: the cached gate plan " +
-      "holds one OS parse and one fallback parse") {
+  /** `from_json` calls in a physical plan. */
+  private def parses(p: org.apache.spark.sql.execution.SparkPlan): Int = {
     import org.apache.spark.sql.catalyst.expressions.JsonToStructs
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    def parses(p: SparkPlan): Int = p match {
+    p match {
       case a: AdaptiveSparkPlanExec => parses(a.inputPlan)
       case _ => p.expressions.map(_.collect { case j: JsonToStructs => j }
         .size).sum + p.children.map(parses).sum
     }
-    // repartitioned so the optimizer cannot fold the gate into a local
-    // relation: the plan keeps the shape a provider's scan gives it
-    val rows = Seq(env("good", ok), env("nvd", "{}", Envelope.NvdSchema))
+  }
+
+  // repartitioned so the optimizer cannot fold the gate into a local
+  // relation: the plan keeps the shape a provider's scan gives it
+  private def scanned =
+    Seq(env("good", ok), env("nvd", "{}", Envelope.NvdSchema))
       .toDF("identifier", "schema", "item").repartition(2)
-    val (good, bad, release) = SchemaGate.validateCached(rows)
+
+  test("validateCached parses each envelope once: the cached gate plan " +
+      "holds one OS parse and one fallback parse") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val (good, bad, release) = SchemaGate.validateCached(scanned)
     try {
       val cached = good.queryExecution.withCachedData
         .collectFirst { case r: InMemoryRelation => r }
@@ -225,7 +230,34 @@ class SchemaGateSpec extends AnyFunSuite {
     } finally release()
   }
 
-  test("commitValidated on a 2-row frame runs at most 3 Spark jobs, " +
+  test("commitValidated parses each envelope once: its executed plans " +
+      "hold one OS parse and one fallback parse") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.graft.bridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val dest = java.nio.file.Files.createTempDirectory("graft-parse")
+      .resolve("r").toString
+    bridge.settleListenerBus(spark.sparkContext, 10000)
+    spark.listenerManager.register(l)
+    try {
+      ResultStore.commitValidated(spark, scanned, dest)
+      bridge.settleListenerBus(spark.sparkContext, 10000)
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    val n = plans.asScala.toSeq.map(parses).sum
+    assert(n == 2, s"$n from_json calls in the commit's executed plans")
+    assert(ResultStore.manifestRows(dest).contains(2L))
+  }
+
+  test("commitValidated on a 2-row frame runs one Spark job, " +
       "plus the quarantine write") {
     val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
     def jobs(rows: Seq[(String, String, String)], dest: String,
@@ -240,10 +272,42 @@ class SchemaGateSpec extends AnyFunSuite {
     val clean = Seq(env("a", ok), env("b", ok))
     jobs(clean, s"$dir/warm", 0)   // warm-up
     val n = jobs(clean, s"$dir/clean", 0)
-    // write, then the manifest aggregate's shuffle and result stages
-    assert(n <= 3, s"commitValidated ran $n jobs")
+    // the write, carrying the observed manifest aggregate
+    assert(n <= 1, s"commitValidated ran $n jobs")
     val q = jobs(Seq(env("a", ok), env("bad", "{}")), s"$dir/quarantine", 1)
-    assert(q <= 4, s"commitValidated with a rejected row ran $q jobs")
+    assert(q <= 2, s"commitValidated with a rejected row ran $q jobs")
+  }
+
+  test("reading a committed store launches no Spark job") {
+    val dest = java.nio.file.Files.createTempDirectory("graft-read")
+      .resolve("r").toString
+    ResultStore.commitValidated(spark,
+      Seq(env("a", ok)).toDF("identifier", "schema", "item"), dest)
+    var out: org.apache.spark.sql.DataFrame = null
+    val n = jobsDuring { out = ResultStore.read(spark, dest) }
+    assert(n == 0, s"ResultStore.read ran $n jobs")
+    assert(out.schema == ResultStore.envelopeSchema)
+    assert(out.select("identifier").as[String].collect().toSeq == Seq("a"))
+  }
+
+  test("a commit of a frame that is not an envelope fails loudly") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-shape").toString
+    val wrong = Seq(
+      Seq(("a", "s", 1)).toDF("identifier", "schema", "item"),
+      Seq(("a", "s")).toDF("identifier", "schema"),
+      Seq(("a", "s", "{}", 1)).toDF("identifier", "schema", "item", "extra"),
+      Seq(("s", "a", "{}")).toDF("schema", "identifier", "item"))
+    wrong.zipWithIndex.foreach { case (df, i) =>
+      val err = intercept[IllegalArgumentException] {
+        ResultStore.commit(spark, df, s"$dir/r$i")
+      }
+      assert(err.getMessage.contains("a store holds envelopes"))
+      intercept[IllegalArgumentException] {
+        ResultStore.commitValidated(spark, df, s"$dir/v$i")
+      }
+      assert(ResultStore.manifest(s"$dir/r$i").isEmpty &&
+        ResultStore.manifest(s"$dir/v$i").isEmpty)
+    }
   }
 
   test("strict failure leaves no staging and the live store and its " +
